@@ -157,7 +157,7 @@ object AutoencoderReconstructor extends ModelType {
 
   /** Pure fit result — everything a scorer needs, no Spark types, so
     * the same fit runs on the driver (solo) or inside a keyed
-    * `mapGroups` task ([[FleetAutoencoder]]). */
+    * fit task ([[FleetAutoencoder]]). */
   private[ml] final case class Fit(
       w: Array[Array[Double]], sigma: Double, mu: Double, sd: Double,
       slotMean: Array[Double], slotSig: Array[Double])

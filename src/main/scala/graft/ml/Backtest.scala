@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * future into training.
   *
   * Scale shape: each origin's train is ONE distributed keyed job
-  * ([[FleetHoltWinters.train]] — per-key sequential fit inside
-  * mapGroups) and its forecast a narrow projection; the origins loop on
+  * ([[FleetHoltWinters.train]] — per-key sequential fits spread over
+  * every core) and its forecast a narrow projection; the origins loop on
   * the driver because backtests use a HANDFUL of origins by design
   * (3-10) — the per-origin frames union into one plan and the actuals
   * join + metric aggregation run as a single keyed job over all origins

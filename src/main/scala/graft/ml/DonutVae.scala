@@ -419,7 +419,7 @@ object DonutVae extends ModelType {
 
   /** The whole training computation as a pure function of the sorted
     * bucketized series (shape shared with the other fits so a fleet
-    * variant can reuse it inside `mapGroups`). */
+    * variant can reuse it per key, [[FleetDonutVae]]). */
   private[ml] def fitSeries(
       series: Seq[(Long, Option[Double])], p: Params): Fit = {
     require(series.nonEmpty, "no data to train on")

@@ -7,18 +7,20 @@ import org.apache.spark.sql.functions._
   * subspace per key, trained distributed. Completes the fleet story for
   * the strongest model type the way [[FleetHoltWinters]] and
   * `FleetSeasonal` do for theirs: the reference trains one model per
-  * job per series (/root/reference/loudml/worker.py); here every key's
-  * fit runs inside one Spark job.
+  * job per series (`loudml/worker.py`); here every key's fit runs
+  * inside one Spark job.
   *
   * Scale shape: the Adam fit is sequential PER KEY but independent
-  * ACROSS keys, so `groupByKey(keys).mapGroups` reusing
-  * [[AutoencoderReconstructor.fitSeries]] verbatim is the honest
-  * physical plan — ONE shuffle keyed by series, each task fitting its
-  * keys' bucketized series in memory (O(buckets) per key, bounded by
-  * the query range like every keyed window; the heavy reduction — the
-  * bucketization — already ran distributed before it). A million hosts
-  * = a million model-sized fits spread over the cluster, not a million
-  * driver-side training jobs.
+  * ACROSS keys, so training goes through the shared keyed-fit path
+  * ([[KeyedFit.perKey]]) reusing [[AutoencoderReconstructor.fitSeries]]
+  * verbatim: one range exchange on the key into `defaultParallelism`
+  * partitions, a local sort, and one pass over each partition's
+  * per-key runs. The explicit partition count keeps AQE from
+  * coalescing the byte-tiny exchange into one task, so the fits spread
+  * over every core (the heavy reduction — the bucketization — already
+  * ran distributed before it). A million hosts = a million model-sized
+  * fits spread over the cluster, not a million one-at-a-time training
+  * jobs.
   *
   * Scoring cogroups each key's points with its state row (state side is
   * one row per series) and replays the solo window kernel
@@ -26,14 +28,11 @@ import org.apache.spark.sql.functions._
   * — the weights decode ONCE per key, windows assemble by slice, and
   * per-key results are bit-identical to training/scoring that series
   * alone (spec-proven). Key columns are matched as STRINGS (tags in
-  * this domain, /root/reference/loudml/model.py match_all).
+  * this domain, `loudml/model.py` match_all).
   */
 object FleetAutoencoder {
   import AutoencoderReconstructor.{Params, fitSeries, predictWindow}
-
-  /** One key's bucketized point; `k` is the string-cast key tuple. */
-  private[ml] case class SeriesPoint(k: Seq[String], bucket: Long,
-      v: Option[Double])
+  import KeyedFit.typedPoints
 
   /** Trained per-key state (the solo model's fields, weights flat). */
   private[ml] case class AeState(k: Seq[String], weights: Seq[Double],
@@ -42,17 +41,6 @@ object FleetAutoencoder {
 
   private[ml] case class AePred(k: Seq[String], bucket: Long,
       value: Option[Double], predicted: Double, sigma: Double)
-
-  private def typedPoints(bucketed: DataFrame, valueCol: String,
-      keys: Seq[String]) = {
-    val spark = bucketed.sparkSession
-    import spark.implicits._
-    bucketed.select(
-        array(keys.map(col(_).cast("string")): _*).as("k"),
-        col("bucket").cast("long").as("bucket"),
-        col(valueCol).cast("double").as("v"))
-      .as[SeriesPoint]
-  }
 
   /** Train one autoencoder state per key from a bucketized frame
     * `(keys…, bucket, valueCol)` (gaps as missing rows or null values —
@@ -80,22 +68,21 @@ object FleetAutoencoder {
     import spark.implicits._
     val skipped = spark.sparkContext.longAccumulator(
       "graft.fleetAe.skippedKeys")
-    val states = typedPoints(bucketed, valueCol, keys)
-      .groupByKey(_.k).flatMapGroups { (key, rows) =>
-        val series = rows.map(r => (r.bucket, r.v)).toSeq.sortBy(_._1)
+    val states = KeyedFit.perKey(typedPoints(bucketed, valueCol, keys)) {
+      (key, series) =>
         // the solo fit's documented preconditions, checked up front —
         // any throw from fitSeries itself is a genuine bug and must
         // fail the job, so nothing here catches
         val degenerate = series.isEmpty ||
           series.size < p.span || series.forall(_._2.isEmpty)
         if (degenerate) {
-          skipped.add(1L); Iterator.empty
+          skipped.add(1L); None
         } else {
           val f = fitSeries(series, p)
-          Iterator.single(AeState(key, f.w.flatten.toIndexedSeq, f.sigma,
+          Some(AeState(key, f.w.flatten.toIndexedSeq, f.sigma,
             f.mu, f.sd, f.slotMean.toIndexedSeq, f.slotSig.toIndexedSeq))
         }
-      }.toDF()
+    }.toDF()
     states.select(
       keys.zipWithIndex.map { case (k, i) => col("k")(i).as(k) } ++
         Seq(col("weights"), col("sigma"), col("mu"), col("sd"),

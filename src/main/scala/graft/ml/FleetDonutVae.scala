@@ -5,13 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Donut VAE for a FLEET of series — one variational model per key,
   * trained distributed, the same shape as [[FleetAutoencoder]]: the
-  * reference trains one model per job per series
-  * (/root/reference/loudml/worker.py); here every key's VAE fit runs
-  * inside one Spark job via `groupByKey(keys).flatMapGroups`, reusing
+  * reference trains one model per job per series (`loudml/worker.py`);
+  * here every key's VAE fit runs inside one Spark job through the
+  * shared keyed-fit path ([[KeyedFit.perKey]]), reusing
   * [[DonutVae.fitSeries]] verbatim per key. The fit is sequential PER
   * KEY (SGD epochs are inherently ordered) but independent ACROSS
-  * keys — ONE shuffle keyed by series, a million hosts = a million
-  * model-sized fits spread over the cluster.
+  * keys — one range exchange on the key into `defaultParallelism`
+  * partitions, which AQE never coalesces (its partition count is
+  * explicit), so the fits spread over every core; a million hosts = a
+  * million model-sized fits spread over the cluster.
   *
   * Scoring cogroups each key's points with its one state row, decodes
   * the weight blob ONCE per key, and replays the solo window kernel
@@ -20,18 +22,8 @@ import org.apache.spark.sql.functions._
   * (spec-proven, the same parity contract as the fleet AE). */
 object FleetDonutVae {
   import DonutVae.{Params, fitSeries, predictWindow}
-  import FleetAutoencoder.{AeState, AePred, SeriesPoint}
-
-  private def typedPoints(bucketed: DataFrame, valueCol: String,
-      keys: Seq[String]) = {
-    val spark = bucketed.sparkSession
-    import spark.implicits._
-    bucketed.select(
-        array(keys.map(col(_).cast("string")): _*).as("k"),
-        col("bucket").cast("long").as("bucket"),
-        col(valueCol).cast("double").as("v"))
-      .as[SeriesPoint]
-  }
+  import FleetAutoencoder.{AeState, AePred}
+  import KeyedFit.typedPoints
 
   /** Train one VAE state per key; degenerate series (empty, all-null,
     * or shorter than the span) skip without aborting the fleet job —
@@ -46,9 +38,8 @@ object FleetDonutVae {
     import spark.implicits._
     val skipped = spark.sparkContext.longAccumulator(
       "graft.fleetVae.skippedKeys")
-    val states = typedPoints(bucketed, valueCol, keys)
-      .groupByKey(_.k).flatMapGroups { (key, rows) =>
-        val series = rows.map(r => (r.bucket, r.v)).toSeq.sortBy(_._1)
+    val states = KeyedFit.perKey(typedPoints(bucketed, valueCol, keys)) {
+      (key, series) =>
         // solo preconditions checked explicitly (a throw from the fit
         // itself is a real bug and still fails the job); the split
         // must leave >= span training buckets for one window
@@ -56,13 +47,13 @@ object FleetDonutVae {
         val degenerate = series.isEmpty || ntrn < p.span ||
           series.forall(_._2.isEmpty)
         if (degenerate) {
-          skipped.add(1L); Iterator.empty
+          skipped.add(1L); None
         } else {
           val f = fitSeries(series, p)
-          Iterator.single(AeState(key, f.net.flat.toIndexedSeq, f.sigma,
+          Some(AeState(key, f.net.flat.toIndexedSeq, f.sigma,
             f.mu, f.sd, f.slotMean.toIndexedSeq, f.slotSig.toIndexedSeq))
         }
-      }.toDF()
+    }.toDF()
     states.select(
       keys.zipWithIndex.map { case (k, i) => col("k")(i).as(k) } ++
         Seq(col("weights"), col("sigma"), col("mu"), col("sd"),

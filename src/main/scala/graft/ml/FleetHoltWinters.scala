@@ -7,20 +7,23 @@ import org.apache.spark.sql.functions._
   * vector, σ) state per key, trained distributed. Completes the fleet
   * story for the third model type the same way [[FleetSeasonal]] does
   * for the per-slot profile: the reference trains one model per job per
-  * series (/root/reference/loudml/worker.py); here every key's
-  * recurrence runs in one Spark job.
+  * series (`loudml/worker.py`); here every key's recurrence runs in one
+  * Spark job.
   *
   * Scale shape: the recurrence is inherently sequential PER KEY but
-  * independent ACROSS keys, so `groupByKey(keys).mapGroups` is the
-  * honest physical plan — ONE shuffle keyed by series, each task folding
-  * its keys' bucketized series in memory (O(buckets) per key, bounded by
-  * the query range, never data volume; the same bound as any keyed
-  * window). A million hosts = a million small folds spread over the
-  * cluster, not a million driver-side training jobs. `mapGroups` is
-  * off-codegen by design — the fold IS the computation, nothing for
-  * Tungsten to fuse, and the heavy reduction (bucketization) already ran
-  * distributed before it. Key columns are matched as STRINGS (they are
-  * tags in this domain, /root/reference/loudml/model.py match_all).
+  * independent ACROSS keys, so training goes through the shared
+  * keyed-fit path ([[KeyedFit.perKey]]): one range exchange on the key
+  * into `defaultParallelism` partitions (an explicit count, so AQE
+  * cannot coalesce it into one task), a local sort, and one pass over
+  * each partition's per-key runs folding the bucketized series in
+  * memory (O(buckets) per key, bounded by the query range, never data
+  * volume; the same bound as any keyed window). A million hosts = a
+  * million small folds spread over the cluster, not a million
+  * one-at-a-time training jobs. The fold is off-codegen by design — it
+  * IS the computation, nothing for Tungsten to fuse, and the heavy
+  * reduction (bucketization) already ran distributed before it. Key
+  * columns are matched as STRINGS (they are tags in this domain,
+  * `loudml/model.py` match_all).
   *
   * Prediction/forecast are pure projections from the state frame:
   * forecast explodes each state row into its horizon buckets (narrow,
@@ -30,10 +33,6 @@ import org.apache.spark.sql.functions._
   * against [[HoltWinters.fit]]).
   */
 object FleetHoltWinters {
-
-  /** One key's bucketized point; `k` is the string-cast key tuple. */
-  private[ml] case class SeriesPoint(k: Seq[String], bucket: Long,
-      v: Option[Double])
 
   /** Trained per-key state (mirrors [[HoltWintersState]]). */
   private[ml] case class FleetState(k: Seq[String], level: Double,
@@ -49,16 +48,11 @@ object FleetHoltWinters {
     require(keys.nonEmpty, "need at least one key column")
     val spark = bucketed.sparkSession
     import spark.implicits._
-    val typed = bucketed.select(
-        array(keys.map(col(_).cast("string")): _*).as("k"),
-        col("bucket").cast("long").as("bucket"),
-        col(valueCol).cast("double").as("v"))
-      .as[SeriesPoint]
-    val states = typed.groupByKey(_.k).mapGroups { (key, rows) =>
-      val series = rows.map(r => (r.bucket, r.v)).toSeq.sortBy(_._1)
+    val states = KeyedFit.perKey(
+        KeyedFit.typedPoints(bucketed, valueCol, keys)) { (key, series) =>
       val st = HoltWinters.fit(series, p)
-      FleetState(key, st.level, st.trend, st.sigma, st.lastBucket,
-        st.season.toSeq)
+      Some(FleetState(key, st.level, st.trend, st.sigma, st.lastBucket,
+        st.season.toSeq))
     }.toDF()
     states.select(
       keys.zipWithIndex.map { case (k, i) => col("k")(i).as(k) } ++

@@ -28,10 +28,15 @@ package graft.operators
   * the FIRST failure with later failures attached as suppressed (a
   * concurrent sibling may have completed its write — harmless, the
   * marker is never written on any failure). An interrupt of the
-  * calling thread cancels the remaining tasks and rethrows immediately
-  * with the interrupt status restored — cancellation must not block
-  * behind every in-flight write. */
+  * calling thread cancels the remaining tasks, waits at most
+  * `AwaitSeconds` for them to exit, and rethrows with the interrupt
+  * status restored and any failure already recorded attached as
+  * suppressed — cancellation must not block behind every in-flight
+  * write, nor leave one running behind the caller's cleanup. */
 private[graft] object Actions {
+  /** Upper bound on waiting for cancelled tasks to exit. */
+  private val AwaitSeconds = 30L
+
   def inParallel(tasks: (() => Unit)*): Unit = {
     if (tasks.size <= 1) { tasks.foreach(_()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
@@ -48,6 +53,7 @@ private[graft] object Actions {
           case e: InterruptedException =>
             futs.foreach(_.cancel(true))
             Thread.currentThread().interrupt()
+            if (firstFailure != null) e.addSuppressed(firstFailure)
             throw e
           case e: java.util.concurrent.ExecutionException =>
             val cause = if (e.getCause != null) e.getCause else e
@@ -59,6 +65,16 @@ private[graft] object Actions {
         }
       }
       if (firstFailure != null) throw firstFailure
-    } finally pool.shutdown()
+    } finally {
+      // a no-op once every task has settled; after an interrupt it
+      // interrupts the cancelled tasks and waits (bounded) for them to
+      // exit, so no write outlives the caller's own finally
+      pool.shutdownNow()
+      val interrupted = Thread.interrupted()
+      try pool.awaitTermination(AwaitSeconds,
+        java.util.concurrent.TimeUnit.SECONDS)
+      catch { case _: InterruptedException => }
+      finally if (interrupted) Thread.currentThread().interrupt()
+    }
   }
 }

@@ -182,8 +182,4 @@ object Tables {
       .option("sep", delimiter)
       .option("inferSchema", "true")
       .csv(path)
-
-  /** Register every table as a temp view so spark.sql(...) works. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -68,11 +68,6 @@ class ScheduledEval(
     } finally scanned.unpersist()
   }
 
-  /** Replay a span of wall-clock time as consecutive trigger firings —
-    * catch-up after downtime, backtesting, tests. */
-  def evalRange(nowFrom: Long, nowTo: Long): Seq[DataFrame] =
-    (nowFrom until nowTo by params.interval).map(evalOnce)
-
   private def alignFloor(ts: Long): Long =
     ts - Math.floorMod(ts, params.bucketInterval)
   private def alignCeil(d: Long): Long = {
