@@ -1,11 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
-import graft.functions.Stats
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Low-rank tied-weights autoencoder — the fast linear-subspace
   * restatement of the reference's Donut VAE
@@ -46,16 +41,12 @@ import graft.functions.Stats
   * model-sized, the same driver budget as every profile/HW fit here; the
   * distributed reduction already happened in the bucketing aggregation)
   * and fits on the driver — epochs·batches of hidden·span flops, no
-  * Spark job per epoch. Solo scoring assembles windows with ONE global
-  * ordered window (`Window.orderBy("bucket")` — a single-partition sort,
-  * acceptable because a solo series is model-sized by reference
-  * semantics: one bucketized series fits one task); each row then
-  * reconstructs narrowly with the weight matrix in the closure. For
-  * many-series scale use [[FleetAutoencoder]], which partitions the
-  * window by series key and trains/scores per key with no global sort.
+  * Spark job per epoch. This object holds only the model's own parts
+  * (the fit, the tied-weights kernel, the forecast step); scoring,
+  * state, forecast roll and the keyed shape ([[FleetAutoencoder]]) are
+  * the shared [[WindowModel]] core.
   */
 object AutoencoderReconstructor extends ModelType {
-  import org.json4s._
   import org.json4s.jackson.JsonMethods
 
   val name = "autoencoder"
@@ -70,21 +61,12 @@ object AutoencoderReconstructor extends ModelType {
       lr: Double = 0.01,
       seed: Long = 42L,
       mcmcIters: Int = 10,
-      sigmaFloor: Double = 1e-9) {
-    def periodBuckets: Int = (period / bucketInterval).toInt
+      sigmaFloor: Double = 1e-9) extends WindowModel.Shape {
     def json: String =
       s"""{"type":"$name","bucket_interval":$bucketInterval,""" +
         s""""period":$period,"span":$span,"hidden":$hidden,""" +
         s""""epochs":$epochs,"batch":$batch,"lr":$lr,"seed":$seed,""" +
         s""""mcmc_iters":$mcmcIters,"sigma_floor":$sigmaFloor}"""
-  }
-
-  private def jNum(j: JValue): Option[Double] = j match {
-    case JInt(x)     => Some(x.toDouble)
-    case JLong(x)    => Some(x.toDouble)
-    case JDouble(x)  => Some(x)
-    case JDecimal(x) => Some(x.toDouble)
-    case _           => None
   }
 
   def parseParams(json: String): Params = {
@@ -146,13 +128,28 @@ object AutoencoderReconstructor extends ModelType {
     train(bucketed, valueCol, parseParams(settingsJson))
 
   def train(bucketed: DataFrame, valueCol: String, p: Params): Trained = {
-    val spark = bucketed.sparkSession
-    val f = fitSeries(HoltWinters.collectSeries(bucketed, valueCol), p)
-    import spark.implicits._
-    val profile = (0 until p.periodBuckets)
-      .map(s => (s.toLong, f.slotMean(s), f.slotSig(s)))
-      .toDF("slot", "mu", "sigma")
-    new Trained(profile, p, f.w, f.sigma, f.mu, f.sd, f.slotMean, f.slotSig)
+    val (profile, st) = core(p).trainSolo(bucketed, valueCol)
+    new Trained(profile, p, st)
+  }
+
+  /** The autoencoder's parts of the shared [[WindowModel]] core: a
+    * series shorter than one window is degenerate. */
+  private[ml] def core(p: Params): WindowModel = new WindowModel(p,
+    fit = series => fitSeries(series, p).state,
+    tooShort = _ < p.span,
+    kernel = st => {
+      val w = weightMatrix(st, p)
+      val (sm, ss) = (st.slot_mean.toArray, st.slot_sigma.toArray)
+      (b, win) => predictWindow(w, p, st.mu, st.sd, sm, ss, b, win)
+    })
+
+  /** The state's flat weights as the hidden×span matrix; a state
+    * trained under another hidden/span fails loudly, not misindexed. */
+  private def weightMatrix(st: WindowModel.State, p: Params): Array[Array[Double]] = {
+    require(st.weights.length == p.hidden * p.span,
+      s"weight shape mismatch for key [${st.k.mkString(",")}]: state has " +
+        s"${st.weights.length} weights, params expect ${p.hidden}×${p.span}")
+    Array.tabulate(p.hidden, p.span)((i, j) => st.weights(i * p.span + j))
   }
 
   /** Pure fit result — everything a scorer needs, no Spark types, so
@@ -160,42 +157,28 @@ object AutoencoderReconstructor extends ModelType {
     * fit task ([[FleetAutoencoder]]). */
   private[ml] final case class Fit(
       w: Array[Array[Double]], sigma: Double, mu: Double, sd: Double,
-      slotMean: Array[Double], slotSig: Array[Double])
+      slotMean: Array[Double], slotSig: Array[Double]) {
+    def state: WindowModel.State = WindowModel.State(Nil,
+      w.flatten.toIndexedSeq, sigma, mu, sd, slotMean.toIndexedSeq,
+      slotSig.toIndexedSeq)
+  }
 
   /** The whole training computation as a pure function of the sorted
     * bucketized series — shared verbatim by solo and fleet training. */
   private[ml] def fitSeries(
       series: Seq[(Long, Option[Double])], p: Params): Fit = {
-    require(series.nonEmpty, "no data to train on")
-    val obs = series.flatMap(_._2)
-    require(obs.nonEmpty, "no observations to train on")
-    val mu = obs.sum / obs.size
-    val sd0 = math.sqrt(obs.map(v => (v - mu) * (v - mu)).sum / obs.size)
-    val sd = if (sd0 == 0.0) 1.0 else sd0 // σ=0→1 guard (donut.py:644-650)
-    val P = p.periodBuckets
-    def slotOf(bucket: Long): Int =
-      (math.floorMod(bucket, p.period) / p.bucketInterval).toInt
+    val WindowModel.Standardized(mu, sd, slotMean, slotSig) =
+      WindowModel.standardize(series, p)
 
-    // per-slot standardized (mean, σ): imputation source + the abnormal-
-    // context band (Donut's abnormal mask zero-weights flagged entries;
-    // here an entry > 3σ_slot off its slot mean is treated as missing)
-    val bySlot = series.collect { case (b, Some(v)) => (slotOf(b), (v - mu) / sd) }
-      .groupBy(_._1).map { case (s, xs) =>
-        val vs = xs.map(_._2)
-        val m = vs.sum / vs.size
-        val sg = math.sqrt(vs.map(v => (v - m) * (v - m)).sum / vs.size)
-        s -> (m, if (sg == 0.0) 1e-6 else sg)
-      }
-    val slotMean = Array.tabulate(P)(s => bySlot.get(s).map(_._1).getOrElse(0.0))
-    val slotSig = Array.tabulate(P)(s => bySlot.get(s).map(_._2).getOrElse(1.0))
-
-    // standardized series + imputed flags (missing or out-of-band)
+    // standardized series + imputed flags: missing, or out of band
+    // (Donut's abnormal mask zero-weights flagged entries; here an
+    // entry > 3σ_slot off its slot mean is treated as missing)
     val n = series.size
     val xs = new Array[Double](n)
     val imp = new Array[Boolean](n)
     var idx = 0
     series.foreach { case (b, vOpt) =>
-      val s = slotOf(b)
+      val s = p.slotOf(b)
       vOpt match {
         case Some(v) =>
           val z = (v - mu) / sd
@@ -276,7 +259,7 @@ object AutoencoderReconstructor extends ModelType {
         val x = java.util.Arrays.copyOfRange(xs, s0, s0 + span)
         val im = java.util.Arrays.copyOfRange(imp, s0, s0 + span)
         im(span - 1) = true
-        x(span - 1) = slotMean(slotOf(series(last)._1))
+        x(span - 1) = slotMean(p.slotOf(series(last)._1))
         val out = mcmcReconstruct(w, x, im, p.mcmcIters, p.hidden, span)
         val e = out(span - 1) - xs(last)
         sse += e * e; cnt += 1
@@ -300,20 +283,18 @@ object AutoencoderReconstructor extends ModelType {
       win: Iterable[(Long, Option[Double])]): Double = {
     val span = p.span
     val interval = p.bucketInterval
-    def slotOf(bucket: Long): Int =
-      (math.floorMod(bucket, p.period) / interval).toInt
     val x = new Array[Double](span)
     val imp = new Array[Boolean](span)
     var j = 0
     while (j < span) {
       val b = endBucket - (span - 1 - j) * interval
-      x(j) = slotMean(slotOf(b)); imp(j) = true; j += 1
+      x(j) = slotMean(p.slotOf(b)); imp(j) = true; j += 1
     }
     win.foreach { case (b, vOpt) =>
       val off = ((b - endBucket) / interval).toInt + span - 1
       if (off >= 0 && off < span && vOpt.isDefined) {
         val z = (vOpt.get - mu) / sd
-        val s = slotOf(b)
+        val s = p.slotOf(b)
         if (math.abs(z - slotMean(s)) > 3.0 * slotSig(s)) {
           // abnormal context → treated as missing (Donut's mask)
           x(off) = slotMean(s); imp(off) = true
@@ -321,123 +302,29 @@ object AutoencoderReconstructor extends ModelType {
       }
     }
     // the target (last) entry is always imputed before scoring
-    x(span - 1) = slotMean(slotOf(endBucket)); imp(span - 1) = true
+    x(span - 1) = slotMean(p.slotOf(endBucket)); imp(span - 1) = true
     val out = mcmcReconstruct(w, x, imp, p.mcmcIters, p.hidden, span)
     mu + sd * out(span - 1)
   }
 
   def load(spark: SparkSession, profile: DataFrame,
-      settingsJson: String): TrainedModel = {
-    val p = parseParams(settingsJson)
-    val j = JsonMethods.parse(settingsJson)
-    val flat = (j \ "weights") match {
-      case JArray(xs) => xs.flatMap(jNum).toArray
-      case _ => throw new IllegalArgumentException("stored model has no weights")
-    }
-    require(flat.length == p.hidden * p.span, "weight shape mismatch")
-    val w = Array.tabulate(p.hidden, p.span)((i, jj) => flat(i * p.span + jj))
-    val sigma = jNum(j \ "sigma").getOrElse(
-      throw new IllegalArgumentException("stored model has no sigma"))
-    val mu = jNum(j \ "mu").getOrElse(0.0)
-    val sd = jNum(j \ "sd").getOrElse(1.0)
-    val prof = profile.orderBy("slot").collect()
-    val slotMean = prof.map(_.getDouble(1))
-    val slotSig = prof.map(_.getDouble(2))
-    new Trained(profile, p, w, sigma, mu, sd, slotMean, slotSig)
-  }
+      settingsJson: String): TrainedModel =
+    new Trained(profile, parseParams(settingsJson),
+      WindowModel.loadState(profile, settingsJson))
 
-  final class Trained(
-      val profile: DataFrame,
-      val params: Params,
-      val weights: Array[Array[Double]],
-      val sigma: Double,
-      val mu: Double,
-      val sd: Double,
-      slotMean: Array[Double],
-      slotSig: Array[Double]) extends TrainedModel {
+  final class Trained private[ml] (prof: DataFrame, val params: Params,
+      st: WindowModel.State)
+      extends WindowModel.Solo(prof, st, core(params)) {
 
     def modelType: String = name
 
-    def settingsJson: String = {
-      val base = params.json.stripSuffix("}")
-      val flat = weights.flatten.mkString(",")
-      s"""$base,"weights":[$flat],"sigma":$sigma,"mu":$mu,"sd":$sd}"""
-    }
+    val weights: Array[Array[Double]] = weightMatrix(state, params)
 
-    /** Window scoring for the solo-series shape: the global
-      * `Window.orderBy` assembles per-bucket windows on ONE partition —
-      * model-sized by reference semantics (a single series' buckets),
-      * not a distributed path; fleet-scale scoring goes through the
-      * keyed fleet variants, which partition the window by series key.
-      * Each row then reconstructs in a narrow map with the weight
-      * matrix in the closure. The series should extend span−1 buckets
-      * back past the scoring range for full context
-      * (donut.py:1210-1217). */
-    def predict(bucketed: DataFrame, valueCol: String,
-        anomalyType: String = "low_high"): DataFrame = {
-      val p = params
-      val span = p.span
-      val w = Window.orderBy("bucket").rowsBetween(-(span - 1), 0)
-      val packed = bucketed
-        .withColumn("__win", collect_list(struct(
-          col("bucket").as("b"), col(valueCol).cast("double").as("v"))).over(w))
-      val outSchema = StructType(packed.schema.fields :+
-        StructField("predicted", DoubleType, nullable = true))
-      val wts = weights
-      val (muL, sdL, smL, ssL) = (mu, sd, slotMean, slotSig)
-      val winIdx = packed.schema.fieldIndex("__win")
-      val bIdx = packed.schema.fieldIndex("bucket")
-      val scored = packed.mapPartitions { it =>
-        it.map { r =>
-          val endBucket = r.getLong(bIdx)
-          val win = r.getSeq[Row](winIdx).map(e => (e.getLong(0),
-            if (e.isNullAt(1)) None else Some(e.getDouble(1))))
-          val pred = AutoencoderReconstructor.predictWindow(
-            wts, p, muL, sdL, smL, ssL, endBucket, win)
-          Row.fromSeq(r.toSeq :+ pred)
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      scored
-        .withColumn("lower", col("predicted") - lit(3.0 * sigma))
-        .withColumn("upper", col("predicted") + lit(3.0 * sigma))
-        .withColumn("score", Stats.anomalyScore(
-          col(valueCol), col("predicted"), col("upper"), anomalyType))
-        .drop("__win")
-    }
-
-    def forecast(spark: SparkSession, from: Long, to: Long): DataFrame =
-      forecastBands(spark, from, to, z = 3.0, noisePerStep = 0.0)
-
-    def forecastCI(spark: SparkSession, from: Long, to: Long,
-        percentInterval: Double, percentNoise: Double): DataFrame =
-      forecastBands(spark, from, to,
-        z = Stats.normPpf(1.0 - (1.0 - percentInterval) / 2.0),
-        noisePerStep = percentNoise * params.bucketInterval.toDouble / 86400.0)
-
-    /** Iterative roll (donut.py:1333-1475): the window slides forward
-      * appending each prediction — driver loop over O(horizon) steps. */
-    private def forecastBands(spark: SparkSession, from: Long, to: Long,
-        z: Double, noisePerStep: Double): DataFrame = {
-      import spark.implicits._
-      val p = params
-      val span = p.span
-      def slotOf(bucket: Long): Int =
-        (math.floorMod(bucket, p.period) / p.bucketInterval).toInt
-      // seed context with slot means (no observations available)
-      val buf = scala.collection.mutable.ArrayBuffer.tabulate(span - 1)(
-        j => slotMean(slotOf(from - (span - 1 - j) * p.bucketInterval)))
-      val rows = Iterator.iterate(from)(_ + p.bucketInterval)
-        .takeWhile(_ < to).zipWithIndex.map { case (b, h) =>
-          val x = (buf.takeRight(span - 1) :+ slotMean(slotOf(b))).toArray
-          val imp = Array.fill(span)(false); imp(span - 1) = true
-          val out = AutoencoderReconstructor.mcmcReconstruct(
-            weights, x, imp, p.mcmcIters, p.hidden, span)
-          buf += out(span - 1)
-          val pred = mu + sd * out(span - 1)
-          val half = z * sigma + noisePerStep * h * math.abs(pred)
-          (b, pred, pred - half, pred + half)
-        }.toSeq
-      rows.toDF("bucket", "predicted", "lower", "upper").orderBy("bucket")
+    protected def next(bucket: Long, ctx: Array[Double]): Double = {
+      val span = params.span
+      val imp = Array.fill(span)(false); imp(span - 1) = true
+      mcmcReconstruct(weights, ctx :+ state.slot_mean(params.slotOf(bucket)),
+        imp, params.mcmcIters, params.hidden, span)(span - 1)
     }
   }
 }

@@ -1,9 +1,7 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.functions.Stats
 
@@ -48,12 +46,14 @@ import graft.functions.Stats
   * Scale shape: identical to the other model fits here — training
   * collects ONE bucketized series (O(buckets), model-sized; the
   * distributed reduction already happened in the bucketing
-  * aggregation) and fits on the driver; scoring assembles windows
-  * with a window function and reconstructs in a narrow map with the
-  * weights in the closure. Everything is deterministic by `seed`.
+  * aggregation) and fits on the driver. This object holds only the
+  * model's own parts (the fit, the net, the window kernel, the
+  * forecast step, the MC band); scoring, state, forecast roll and the
+  * keyed shape ([[FleetDonutVae]]) are the shared [[WindowModel]]
+  * core, the same as the autoencoder's. Everything is deterministic
+  * by `seed`.
   */
 object DonutVae extends ModelType {
-  import org.json4s._
   import org.json4s.jackson.JsonMethods
 
   val name = "donut_vae"
@@ -74,8 +74,7 @@ object DonutVae extends ModelType {
       injectRate: Double = 0.01,
       l2: Double = 0.001,
       clipNorm: Double = 10.0,
-      sigmaFloor: Double = 1e-9) {
-    def periodBuckets: Int = (period / bucketInterval).toInt
+      sigmaFloor: Double = 1e-9) extends WindowModel.Shape {
     def json: String =
       s"""{"type":"$name","bucket_interval":$bucketInterval,""" +
         s""""period":$period,"span":$span,"intermediate":$intermediate,""" +
@@ -83,14 +82,6 @@ object DonutVae extends ModelType {
         s""""seed":$seed,"train_size":$trainSize,"patience":$patience,""" +
         s""""mcmc_iters":$mcmcIters,"inject_rate":$injectRate,""" +
         s""""l2":$l2,"clip_norm":$clipNorm,"sigma_floor":$sigmaFloor}"""
-  }
-
-  private def jNum(j: JValue): Option[Double] = j match {
-    case JInt(x)     => Some(x.toDouble)
-    case JLong(x)    => Some(x.toDouble)
-    case JDouble(x)  => Some(x)
-    case JDecimal(x) => Some(x.toDouble)
-    case _           => None
   }
 
   def parseParams(json: String): Params = {
@@ -247,14 +238,17 @@ object DonutVae extends ModelType {
 
     def flat: Array[Double] =
       layers.flatMap(l => l.k.toSeq ++ l.b.toSeq).toArray
+    /** Load a [[flat]] blob; its length is checked before any copy, so
+      * a blob of another net shape fails with the named error. */
     def loadFlat(flatW: Array[Double]): Unit = {
+      val expected = layers.map(l => l.k.length + l.b.length).sum
+      require(flatW.length == expected,
+        s"weight blob length ${flatW.length}, expected $expected")
       var off = 0
       layers.foreach { l =>
         System.arraycopy(flatW, off, l.k, 0, l.k.length); off += l.k.length
         System.arraycopy(flatW, off, l.b, 0, l.b.length); off += l.b.length
       }
-      require(off == flatW.length,
-        s"weight blob length ${flatW.length}, expected $off")
     }
   }
 
@@ -288,18 +282,35 @@ object DonutVae extends ModelType {
     train(bucketed, valueCol, parseParams(settingsJson))
 
   def train(bucketed: DataFrame, valueCol: String, p: Params): Trained = {
-    val spark = bucketed.sparkSession
-    val f = fitSeries(HoltWinters.collectSeries(bucketed, valueCol), p)
-    import spark.implicits._
-    val profile = (0 until p.periodBuckets)
-      .map(s => (s.toLong, f.slotMean(s), f.slotSig(s)))
-      .toDF("slot", "mu", "sigma")
-    new Trained(profile, p, f.net, f.sigma, f.mu, f.sd, f.slotMean, f.slotSig)
+    val (profile, st) = core(p).trainSolo(bucketed, valueCol)
+    new Trained(profile, p, st)
+  }
+
+  /** The VAE's parts of the shared [[WindowModel]] core: the sequential
+    * split must leave >= span training buckets for one window, so a
+    * series whose training part is shorter than the span is
+    * degenerate. */
+  private[ml] def core(p: Params): WindowModel = new WindowModel(p,
+    fit = series => fitSeries(series, p).state,
+    tooShort = n => math.round(n * p.trainSize).toInt < p.span,
+    kernel = st => {
+      val net = decodeNet(st, p)
+      (b, win) => predictWindow(net, p, st.mu, st.sd, b, win)
+    })
+
+  private def decodeNet(st: WindowModel.State, p: Params): Net = {
+    val net = new Net(p, new scala.util.Random(p.seed))
+    net.loadFlat(st.weights.toArray)
+    net
   }
 
   private[ml] final case class Fit(net: Net, sigma: Double, mu: Double,
       sd: Double, slotMean: Array[Double], slotSig: Array[Double],
-      valLoss: Double)
+      valLoss: Double) {
+    def state: WindowModel.State = WindowModel.State(Nil,
+      net.flat.toIndexedSeq, sigma, mu, sd, slotMean.toIndexedSeq,
+      slotSig.toIndexedSeq)
+  }
 
   /** Stride-1 windows + missing flags over a standardized series —
     * `_format_dataset` (donut.py:945-987): missing entries zero. */
@@ -422,26 +433,9 @@ object DonutVae extends ModelType {
     * variant can reuse it per key, [[FleetDonutVae]]). */
   private[ml] def fitSeries(
       series: Seq[(Long, Option[Double])], p: Params): Fit = {
-    require(series.nonEmpty, "no data to train on")
-    val obs = series.flatMap(_._2)
-    require(obs.nonEmpty, "no observations to train on")
-    val mu = obs.sum / obs.size
-    val sd0 = math.sqrt(obs.map(v => (v - mu) * (v - mu)).sum / obs.size)
-    val sd = if (sd0 == 0.0) 1.0 else sd0 // σ=0→1 guard (donut.py:644-650)
-    val P = p.periodBuckets
-    def slotOf(bucket: Long): Int =
-      (math.floorMod(bucket, p.period) / p.bucketInterval).toInt
-
     // slot stats ride along for forecast seeding (apply_defaults analog)
-    val bySlot = series.collect { case (b, Some(v)) => (slotOf(b), (v - mu) / sd) }
-      .groupBy(_._1).map { case (s, xs) =>
-        val vs = xs.map(_._2)
-        val m = vs.sum / vs.size
-        val sg = math.sqrt(vs.map(v => (v - m) * (v - m)).sum / vs.size)
-        s -> (m, if (sg == 0.0) 1e-6 else sg)
-      }
-    val slotMean = Array.tabulate(P)(s => bySlot.get(s).map(_._1).getOrElse(0.0))
-    val slotSig = Array.tabulate(P)(s => bySlot.get(s).map(_._2).getOrElse(1.0))
+    val WindowModel.Standardized(mu, sd, slotMean, slotSig) =
+      WindowModel.standardize(series, p)
 
     // standardized series, missing → 0 (donut.py:980-984)
     val n = series.size
@@ -572,13 +566,8 @@ object DonutVae extends ModelType {
       val f = fitSeries(series, cand)
       if (best == null || f.valLoss < best._2.valLoss) best = (cand, f)
     }
-    val (bp, f) = best
-    import spark.implicits._
-    val profile = (0 until bp.periodBuckets)
-      .map(s => (s.toLong, f.slotMean(s), f.slotSig(s)))
-      .toDF("slot", "mu", "sigma")
-    (bp, new Trained(profile, bp, f.net, f.sigma, f.mu, f.sd,
-      f.slotMean, f.slotSig))
+    val (bp, st) = (best._1, best._2.state)
+    (bp, new Trained(WindowModel.profileFrame(spark, st), bp, st))
   }
 
   /** One-step prediction for the window ending at `endBucket` —
@@ -588,12 +577,21 @@ object DonutVae extends ModelType {
   private[ml] def predictWindow(net: Net, p: Params, mu: Double,
       sd: Double, endBucket: Long,
       win: Iterable[(Long, Option[Double])]): Double = {
+    val (x, m) = maskWindow(p, mu, sd, endBucket, win)
+    val xh = mcmcImpute(net, x, m, p.mcmcIters)
+    mu + sd * xh(p.span - 1)
+  }
+
+  /** The standardized window ending at `endBucket` and its missing
+    * flags, the target (last) entry forced missing at 0. */
+  private def maskWindow(p: Params, mu: Double, sd: Double,
+      endBucket: Long, win: Iterable[(Long, Option[Double])])
+      : (Array[Double], Array[Boolean]) = {
     val span = p.span
-    val interval = p.bucketInterval
     val x = new Array[Double](span)
     val m = Array.fill(span)(true)
     win.foreach { case (b, vOpt) =>
-      val off = ((b - endBucket) / interval).toInt + span - 1
+      val off = ((b - endBucket) / p.bucketInterval).toInt + span - 1
       if (off >= 0 && off < span && vOpt.isDefined) {
         x(off) = (vOpt.get - mu) / sd
         m(off) = false
@@ -601,83 +599,25 @@ object DonutVae extends ModelType {
     }
     m(span - 1) = true
     x(span - 1) = 0.0
-    val xh = mcmcImpute(net, x, m, p.mcmcIters)
-    mu + sd * xh(span - 1)
+    (x, m)
   }
 
   def load(spark: SparkSession, profile: DataFrame,
-      settingsJson: String): TrainedModel = {
-    val p = parseParams(settingsJson)
-    val j = JsonMethods.parse(settingsJson)
-    val flat = (j \ "weights") match {
-      case JArray(ws) => ws.flatMap(jNum).toArray
-      case _ => throw new IllegalArgumentException("stored model has no weights")
-    }
-    val net = new Net(p, new scala.util.Random(p.seed))
-    net.loadFlat(flat)
-    val sigma = jNum(j \ "sigma").getOrElse(
-      throw new IllegalArgumentException("stored model has no sigma"))
-    val mu = jNum(j \ "mu").getOrElse(0.0)
-    val sd = jNum(j \ "sd").getOrElse(1.0)
-    val prof = profile.orderBy("slot").collect()
-    new Trained(profile, p, net, sigma, mu, sd,
-      prof.map(_.getDouble(1)), prof.map(_.getDouble(2)))
-  }
+      settingsJson: String): TrainedModel =
+    new Trained(profile, parseParams(settingsJson),
+      WindowModel.loadState(profile, settingsJson))
 
-  final class Trained(
-      val profile: DataFrame,
-      val params: Params,
-      private[ml] val net: Net,
-      val sigma: Double,
-      val mu: Double,
-      val sd: Double,
-      slotMean: Array[Double],
-      slotSig: Array[Double]) extends TrainedModel {
+  final class Trained private[ml] (prof: DataFrame, val params: Params,
+      st: WindowModel.State)
+      extends WindowModel.Solo(prof, st, core(params)) {
 
     def modelType: String = name
 
-    def settingsJson: String = {
-      val base = params.json.stripSuffix("}")
-      val flat = net.flat.mkString(",")
-      s"""$base,"weights":[$flat],"sigma":$sigma,"mu":$mu,"sd":$sd}"""
-    }
+    private[ml] val net: Net = decodeNet(state, params)
 
-    /** Same solo-series scoring shape as the autoencoder: one global
-      * ordered window (model-sized by reference semantics — a single
-      * bucketized series), then a narrow map with the net in the
-      * closure. */
-    def predict(bucketed: DataFrame, valueCol: String,
-        anomalyType: String = "low_high"): DataFrame = {
-      val p = params
-      val span = p.span
-      val w = Window.orderBy("bucket").rowsBetween(-(span - 1), 0)
-      val packed = bucketed
-        .withColumn("__win", collect_list(struct(
-          col("bucket").as("b"), col(valueCol).cast("double").as("v"))).over(w))
-      val outSchema = StructType(packed.schema.fields :+
-        StructField("predicted", DoubleType, nullable = true))
-      val flatW = net.flat
-      val (muL, sdL) = (mu, sd)
-      val winIdx = packed.schema.fieldIndex("__win")
-      val bIdx = packed.schema.fieldIndex("bucket")
-      val scored = packed.mapPartitions { it =>
-        val localNet = new Net(p, new scala.util.Random(p.seed))
-        localNet.loadFlat(flatW)
-        it.map { r =>
-          val endBucket = r.getLong(bIdx)
-          val win = r.getSeq[Row](winIdx).map(e => (e.getLong(0),
-            if (e.isNullAt(1)) None else Some(e.getDouble(1))))
-          val pred = DonutVae.predictWindow(
-            localNet, p, muL, sdL, endBucket, win)
-          Row.fromSeq(r.toSeq :+ pred)
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      scored
-        .withColumn("lower", col("predicted") - lit(3.0 * sigma))
-        .withColumn("upper", col("predicted") + lit(3.0 * sigma))
-        .withColumn("score", Stats.anomalyScore(
-          col(valueCol), col("predicted"), col("upper"), anomalyType))
-        .drop("__win")
+    protected def next(bucket: Long, ctx: Array[Double]): Double = {
+      val m = Array.fill(params.span)(false); m(params.span - 1) = true
+      mcmcImpute(net, ctx :+ 0.0, m, params.mcmcIters)(params.span - 1)
     }
 
     /** The reference's MC-integration band (donut.py:1281-1292): per
@@ -687,43 +627,20 @@ object DonutVae extends ModelType {
     def predictMc(bucketed: DataFrame, valueCol: String,
         mcCount: Int = 100,
         anomalyType: String = "low_high"): DataFrame = {
-      val p = params
+      val (p, st) = (params, state)
       val span = p.span
-      val w = Window.orderBy("bucket").rowsBetween(-(span - 1), 0)
-      val packed = bucketed
-        .withColumn("__win", collect_list(struct(
-          col("bucket").as("b"), col(valueCol).cast("double").as("v"))).over(w))
-      val outSchema = StructType(packed.schema.fields ++ Seq(
-        StructField("predicted", DoubleType, nullable = true),
-        StructField("lower", DoubleType, nullable = true),
-        StructField("upper", DoubleType, nullable = true)))
-      val flatW = net.flat
-      val (muL, sdL, seedL) = (mu, sd, params.seed)
-      val winIdx = packed.schema.fieldIndex("__win")
-      val bIdx = packed.schema.fieldIndex("bucket")
-      val scored = packed.mapPartitions { it =>
-        val localNet = new Net(p, new scala.util.Random(seedL))
-        localNet.loadFlat(flatW)
+      WindowModel.mapWindows(bucketed, valueCol, span,
+          Seq("predicted", "lower", "upper")) { () =>
+        val localNet = decodeNet(st, p)
         val I = p.intermediate; val L = p.latent
-        it.map { r =>
-          val endBucket = r.getLong(bIdx)
-          val win = r.getSeq[Row](winIdx).map(e => (e.getLong(0),
-            if (e.isNullAt(1)) None else Some(e.getDouble(1))))
+        (endBucket, win) => {
           // impute like the deterministic path, keeping the window
-          val x = new Array[Double](span)
-          val m = Array.fill(span)(true)
-          win.foreach { case (b, vOpt) =>
-            val off = ((b - endBucket) / p.bucketInterval).toInt + span - 1
-            if (off >= 0 && off < span && vOpt.isDefined) {
-              x(off) = (vOpt.get - muL) / sdL; m(off) = false
-            }
-          }
-          m(span - 1) = true; x(span - 1) = 0.0
-          val xh = DonutVae.mcmcImpute(localNet, x, m, p.mcmcIters)
+          val (x, m) = maskWindow(p, st.mu, st.sd, endBucket, win)
+          val xh = mcmcImpute(localNet, x, m, p.mcmcIters)
           x(span - 1) = xh(span - 1)
-          val pred = muL + sdL * xh(span - 1)
+          val pred = st.mu + st.sd * xh(span - 1)
           // MC integration over sampled z (donut.py:1283-1292)
-          val rng = new scala.util.Random(seedL ^ endBucket)
+          val rng = new scala.util.Random(p.seed ^ endBucket)
           val h1 = new Array[Double](I); val h2 = new Array[Double](I)
           val zm = new Array[Double](L); val zl = new Array[Double](L)
           localNet.encode(x, h1, h2, zm, zl)
@@ -744,49 +661,13 @@ object DonutVae extends ModelType {
           }
           val meanD = sum / mcCount
           val stdD = math.sqrt(math.max(0.0, sumSq / mcCount - meanD * meanD))
-          val half = 3.0 * sdL * stdD
-          Row.fromSeq(r.toSeq ++ Seq(pred, pred - half, pred + half))
+          val half = 3.0 * st.sd * stdD
+          Seq(pred, pred - half, pred + half)
         }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      scored
+      }
         .withColumn("score", Stats.anomalyScore(
           col(valueCol), col("predicted"), col("upper"), anomalyType))
         .drop("__win")
-    }
-
-    def forecast(spark: SparkSession, from: Long, to: Long): DataFrame =
-      forecastBands(spark, from, to, z = 3.0, noisePerStep = 0.0)
-
-    def forecastCI(spark: SparkSession, from: Long, to: Long,
-        percentInterval: Double, percentNoise: Double): DataFrame =
-      forecastBands(spark, from, to,
-        z = Stats.normPpf(1.0 - (1.0 - percentInterval) / 2.0),
-        noisePerStep = percentNoise * params.bucketInterval.toDouble / 86400.0)
-
-    /** Iterative roll seeded from the slot profile (the trait's
-      * no-observation forecast contract; the reference always forecasts
-      * from observed history, so the seed is the apply_defaults slot
-      * mean — documented deviation shared with the autoencoder). */
-    private def forecastBands(spark: SparkSession, from: Long, to: Long,
-        z: Double, noisePerStep: Double): DataFrame = {
-      import spark.implicits._
-      val p = params
-      val span = p.span
-      def slotOf(bucket: Long): Int =
-        (math.floorMod(bucket, p.period) / p.bucketInterval).toInt
-      val buf = scala.collection.mutable.ArrayBuffer.tabulate(span - 1)(
-        j => slotMean(slotOf(from - (span - 1 - j) * p.bucketInterval)))
-      val rows = Iterator.iterate(from)(_ + p.bucketInterval)
-        .takeWhile(_ < to).zipWithIndex.map { case (b, h) =>
-          val x = (buf.takeRight(span - 1) :+ 0.0).toArray
-          val m = Array.fill(span)(false); m(span - 1) = true
-          val xh = DonutVae.mcmcImpute(net, x, m, p.mcmcIters)
-          buf += xh(span - 1)
-          val pred = mu + sd * xh(span - 1)
-          val half = z * sigma + noisePerStep * h * math.abs(pred)
-          (b, pred, pred - half, pred + half)
-        }.toSeq
-      rows.toDF("bucket", "predicted", "lower", "upper").orderBy("bucket")
     }
   }
 }

@@ -206,14 +206,6 @@ object HoltWintersType extends ModelType {
 
   val name = "holtwinters"
 
-  private def jNum(j: JValue): Option[Double] = j match {
-    case JInt(x)     => Some(x.toDouble)
-    case JLong(x)    => Some(x.toDouble)
-    case JDouble(x)  => Some(x)
-    case JDecimal(x) => Some(x.toDouble)
-    case _           => None
-  }
-
   private def params(json: String): (HoltWintersParams, Boolean) = {
     val j = JsonMethods.parse(json)
     val base = HoltWintersParams(

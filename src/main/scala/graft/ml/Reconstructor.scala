@@ -63,14 +63,6 @@ object WindowReconstructor extends ModelType {
         s""""sigma_floor":$sigmaFloor}"""
   }
 
-  private def jNum(j: JValue): Option[Double] = j match {
-    case JInt(x)     => Some(x.toDouble)
-    case JLong(x)    => Some(x.toDouble)
-    case JDouble(x)  => Some(x)
-    case JDecimal(x) => Some(x.toDouble)
-    case _           => None
-  }
-
   def parseParams(json: String): Params = {
     val j = JsonMethods.parse(json)
     Params(

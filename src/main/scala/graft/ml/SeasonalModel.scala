@@ -180,18 +180,9 @@ object SeasonalModel {
 /** The seasonal baseline behind the [[ModelType]] registry seam
   * (/root/reference/loudml/model.py:445-468). */
 object SeasonalModelType extends ModelType {
-  import org.json4s._
   import org.json4s.jackson.JsonMethods
 
   val name = "seasonal"
-
-  private def jNum(j: JValue): Option[Double] = j match {
-    case JInt(x)     => Some(x.toDouble)
-    case JLong(x)    => Some(x.toDouble)
-    case JDouble(x)  => Some(x)
-    case JDecimal(x) => Some(x.toDouble)
-    case _           => None
-  }
 
   def parseParams(json: String): SeasonalModelParams = {
     val j = JsonMethods.parse(json)

@@ -179,6 +179,23 @@ class AutoencoderSpec extends SparkSpec {
       solo.weights.flatten.toSeq)
   }
 
+  test("fleet AE: a state of another hidden/span fails keyed predict " +
+      "with the named error") {
+    val p = AutoencoderReconstructor.Params(bucketInterval = HOUR, hidden = 2)
+    val df = sinSeries(48, HOUR, seed = 7).map(x => ("web1", x._1, x._2))
+      .toDF("host", "bucket", "value")
+    for (n <- Seq(p.hidden * p.span - 1, p.hidden * p.span + 1)) {
+      val states = Seq(("web1", Seq.fill(n)(0.1), 1.0, 0.0, 1.0,
+          Seq.fill(24)(0.0), Seq.fill(24)(1.0)))
+        .toDF("host", "weights", "sigma", "mu", "sd", "slot_mean", "slot_sigma")
+      val e = intercept[Exception](
+        FleetAutoencoder.predict(df, states, "value", Seq("host"), p).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => c.isInstanceOf[IllegalArgumentException] &&
+          c.getMessage.contains("weight shape mismatch")), s"$n weights: $e")
+    }
+  }
+
   test("registry save/load round-trip: identical predictions, " +
       "deterministic retrain") {
     assert(ModelRegistry.names.contains("autoencoder"))

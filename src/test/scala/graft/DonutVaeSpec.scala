@@ -24,6 +24,15 @@ class DonutVaeSpec extends SparkSpec {
     }
   }
 
+  /** The flat weight blob a trained model's settings JSON carries. */
+  private def settingsWeights(m: TrainedModel): Seq[Double] = {
+    import org.json4s._
+    org.json4s.jackson.JsonMethods.parse(m.settingsJson) \ "weights" match {
+      case JArray(ws) => ws.collect { case JDouble(x) => x }
+      case other => fail(s"no weights: $other")
+    }
+  }
+
   test("anomaly F1 >= 0.75 on seeded sin + level shift " +
       "(test_donut.py:532-584 floor)") {
     val interval = 1200L
@@ -138,19 +147,30 @@ class DonutVaeSpec extends SparkSpec {
     val fleet = Seq(
       "web1" -> sinSeries(240, HOUR, seed = 11),
       "web2" -> sinSeries(240, HOUR, seed = 29).map(t => (t._1, t._2 * 3)))
-    val df = (fleet.flatMap { case (h, s) => s.map(x => (h, x._1, x._2)) } ++
-        Seq(("shorty", 0L, 1.0), ("shorty", HOUR, 2.0))) // < span buckets
+    val degenerate = Seq(("shorty", 0L, 1.0), ("shorty", HOUR, 2.0)) ++ // < span buckets
+      // >= span buckets, but round(30 * trainSize) = 20 < span: the
+      // VAE's own degenerate test, stricter than the autoencoder's
+      (0 until 30).map(t => ("split", t * HOUR, 1.0 + t % 3))
+    val ghost = (0 until 48).map(t => ("ghost", t * HOUR, null: java.lang.Double))
+    val df = ((fleet.flatMap { case (h, s) => s.map(x => (h, x._1, x._2)) } ++
+        degenerate).map { case (h, b, v) => (h, b, java.lang.Double.valueOf(v)) } ++
+        ghost) // all null
       .toDF("host", "bucket", "value")
     val states = FleetDonutVae.train(df, "value", Seq("host"), p)
     assert(states.select("host").as[String].collect().sorted.toSeq ==
-      Seq("web1", "web2")) // shorty skipped, not fatal
+      Seq("web1", "web2")) // shorty, split and ghost skipped, not fatal
     val scoredAll = FleetDonutVae.predict(df, states, "value", Seq("host"), p)
-    assert(scoredAll.filter(col("host") === "shorty").count() == 0)
+    assert(scoredAll.filter(col("host").isin("shorty", "split", "ghost"))
+      .count() == 0)
     for ((h, s) <- fleet) {
       val solo = DonutVae.train(s.toDF("bucket", "value"), "value", p)
       val st = states.filter(col("host") === h).head()
+      // state parity: the flat weight blob, sigma, mu, sd all bit-equal
+      assert(st.getSeq[Double](st.fieldIndex("weights")).toSeq ==
+        settingsWeights(solo))
       assert(st.getAs[Double]("sigma") == solo.sigma)
       assert(st.getAs[Double]("mu") == solo.mu)
+      assert(st.getAs[Double]("sd") == solo.sd)
       val soloPred = solo.predict(s.toDF("bucket", "value"), "value")
         .orderBy("bucket")
         .select("predicted", "score").as[(Double, Double)].collect()
@@ -160,6 +180,33 @@ class DonutVaeSpec extends SparkSpec {
       assert(fleetPred.length == s.length)
       assert(soloPred.zip(fleetPred).forall { case ((p1, s1), (p2, s2)) =>
         p1 == p2 && s1 == s2 })
+    }
+  }
+
+  test("a weight blob of another net shape fails with the named error " +
+      "before any copy, solo load and keyed predict alike") {
+    val p = DonutVae.Params(bucketInterval = HOUR, epochs = 1,
+      intermediate = 4, latent = 2)
+    val series = sinSeries(96, HOUR, seed = 17)
+    val m = DonutVae.train(series.toDF("bucket", "value"), "value", p)
+    val flat = settingsWeights(m)
+    val df = series.map(x => ("web1", x._1, x._2)).toDF("host", "bucket", "value")
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    def assertNamed(what: String)(run: => Any): Unit = {
+      val e = intercept[Exception](run)
+      assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("weight blob length")), s"$what: $e")
+    }
+    for ((what, blob) <- Seq("short" -> flat.dropRight(1), "long" -> (flat :+ 0.0))) {
+      val json = m.settingsJson.replace(flat.mkString("[", ",", "]"),
+        blob.mkString("[", ",", "]"))
+      assertNamed(s"solo load, $what blob")(DonutVae.load(spark, m.profile, json))
+      val states = Seq(("web1", blob, m.sigma, m.mu, m.sd,
+          Seq.fill(24)(0.0), Seq.fill(24)(1.0)))
+        .toDF("host", "weights", "sigma", "mu", "sd", "slot_mean", "slot_sigma")
+      assertNamed(s"keyed predict, $what blob")(
+        FleetDonutVae.predict(df, states, "value", Seq("host"), p).collect())
     }
   }
 

@@ -726,4 +726,62 @@ class PlanShapeSpec extends SparkSpec {
     // the plan is a pure narrow Project over the relation (no shuffle)
     assert(!p.contains("Exchange"), p)
   }
+
+  /** Lines whose operator is `op`, past the tree drawing and any
+    * codegen stage prefix. */
+  private def ops(p: String, op: String): Int =
+    p.linesIterator.count(_.replaceFirst("""^[\s:+\-]*(\*\(\d+\) )?""", "")
+      .startsWith(op + " "))
+
+  private lazy val neuralFleet = (for (h <- Seq("a", "b"); t <- 0 until 48)
+    yield (h, t * 3600L, math.sin(t * math.Pi / 12) + h.head)).toDF("host", "bucket", "value")
+  private val aeP = graft.ml.AutoencoderReconstructor.Params(
+    bucketInterval = 3600L, hidden = 2, epochs = 1)
+  private val vaeP = graft.ml.DonutVae.Params(bucketInterval = 3600L,
+    epochs = 1, intermediate = 4, latent = 2)
+
+  /** The neural models' plan shapes (the window-model core keeps both):
+    * solo scoring is ONE ordered window and no cogroup; keyed scoring
+    * one cogroup; keyed training one range exchange with an explicit
+    * `defaultParallelism` count, which AQE cannot coalesce. */
+  private def assertNeuralShapes(name: String, soloScores: Seq[org.apache.spark.sql.DataFrame],
+      train: org.apache.spark.sql.DataFrame,
+      predict: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+    for (scored <- soloScores) {
+      val p = plan(scored)
+      assert(ops(p, "Window") == 1, s"$name solo: $p")
+      assert(ops(p, "CoGroup") == 0, s"$name solo: $p")
+    }
+    val t = plan(train)
+    val n = spark.sparkContext.defaultParallelism
+    assert(shuffles(t) == 1, s"$name keyed train: $t")
+    assert(t.linesIterator.exists(l => l.contains("Exchange rangepartitioning") &&
+      l.contains(s", $n), REPARTITION_BY_NUM")), s"$name keyed train: $t")
+    val k = plan(predict(train))
+    assert(ops(k, "CoGroup") == 1, s"$name keyed predict: $k")
+    assert(ops(k, "Window") == 0, s"$name keyed predict: $k")
+  }
+
+  test("autoencoder: solo predict is one Window and no CoGroup; keyed " +
+      "predict one CoGroup; keyed train one range exchange into " +
+      "defaultParallelism partitions") {
+    import graft.ml.{AutoencoderReconstructor, FleetAutoencoder}
+    val solo = neuralFleet.filter(col("host") === "a").select("bucket", "value")
+    val m = AutoencoderReconstructor.train(solo, "value", aeP)
+    assertNeuralShapes("autoencoder", Seq(m.predict(solo, "value")),
+      FleetAutoencoder.train(neuralFleet, "value", Seq("host"), aeP),
+      FleetAutoencoder.predict(neuralFleet, _, "value", Seq("host"), aeP))
+  }
+
+  test("Donut VAE: solo predict and predictMc are one Window and no " +
+      "CoGroup; keyed predict one CoGroup; keyed train one range " +
+      "exchange into defaultParallelism partitions") {
+    import graft.ml.{DonutVae, FleetDonutVae}
+    val solo = neuralFleet.filter(col("host") === "a").select("bucket", "value")
+    val m = DonutVae.train(solo, "value", vaeP)
+    assertNeuralShapes("donut_vae",
+      Seq(m.predict(solo, "value"), m.predictMc(solo, "value", mcCount = 2)),
+      FleetDonutVae.train(neuralFleet, "value", Seq("host"), vaeP),
+      FleetDonutVae.predict(neuralFleet, _, "value", Seq("host"), vaeP))
+  }
 }
